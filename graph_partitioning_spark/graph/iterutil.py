@@ -62,7 +62,18 @@ def plan_size(df: DataFrame, cap: int = 500) -> int:
     return walk(df._jdf.queryExecution().analyzed(), cap)
 
 
-def materialize_static(df: DataFrame, max_plain_plan: int = 80) -> DataFrame:
+# Logical-plan size above which a static frame's lineage is worth cutting:
+# bench-path static frames measured <= ~60 nodes, composed-pipeline ones
+# >= 136 (see materialize_static).
+DEEP_PLAN = 80
+
+
+def is_deep(df: DataFrame, max_plain_plan: int = DEEP_PLAN) -> bool:
+    """True if ``df``'s analyzed plan has more than ``max_plain_plan`` nodes."""
+    return plan_size(df, max_plain_plan + 1) > max_plain_plan
+
+
+def materialize_static(df: DataFrame, max_plain_plan: int = DEEP_PLAN) -> DataFrame:
     """Barrier for STATIC frames (computed once, then only *joined against*
     every superstep: pagerank's link table, a vote loop's symmetrized edge
     frame) — truncate the plan only when there is lineage worth truncating.
@@ -95,7 +106,7 @@ def materialize_static(df: DataFrame, max_plain_plan: int = 80) -> DataFrame:
     are referenced a constant number of times per superstep, so their
     estimated stats never compound. ``release`` handles both variants.
     """
-    if plan_size(df, max_plain_plan + 1) <= max_plain_plan:
+    if not is_deep(df, max_plain_plan):
         return df.persist()
     return df.localCheckpoint(eager=False)
 

@@ -10,25 +10,46 @@ max_v |r'(v) − r(v)| < tol.
 
 Plan shape per superstep (the reference's vote join J1 shape,
 /root/reference/graph_partitioning/fennel.pyx:19-38, re-expressed relationally):
-  links ⋈ ranks on src  →  groupBy(dst).sum  →  left join back onto ranks.
+  links ⟕ state on src = id  →  explode(edge message, self row)  →  groupBy(target).
 
 Scale notes:
-- ``links`` (edge table with per-edge contribution share) is repartitioned by
-  src once and persisted — only the (small, 2-column) rank table shuffles per
-  iteration.
-- The groupBy(dst) aggregation is a partial (map-side) + final hash agg, so a
-  power-law hub vertex receives pre-combined partial sums, one per shuffle
-  partition, not one message per in-edge — the classic combiner answer to
-  skew; AQE skew-join handles the join side.
-- Dangling mass is a single column-pruned scan over ranks (a static
-  ``is_dangling`` flag avoids a per-iteration anti-join).
-- Every ``checkpoint_every`` supersteps the rank state is written durably
-  with a manifest (counters: edges_scanned, messages_exchanged, skew_ratio)
-  and re-read, breaking lineage; a killed run resumes from the last manifest.
+- One hash layout: ``links(src, dst[, weight])`` is cached hash-partitioned
+  by ``src`` and the rank state ``(id, rank, w_out)`` by ``id``, both into
+  ``spark.sql.shuffle.partitions`` partitions (the count the superstep's
+  exchange produces), so the superstep join is a partition-local shuffled
+  hash join (query-scoped ``shuffle_hash`` hint: no broadcast, no exchange).
+  The state is referenced once per superstep: every joined row emits its
+  edge message ``weight * rank / w_out`` and an idempotent self row carrying
+  the old rank and ``w_out``, and the single ``groupBy(target)`` exchange
+  both sums the messages and builds the next id-partitioned state. That
+  exchange is the only shuffle of a steady-state superstep.
+- The aggregation is a partial (map-side) + final hash agg, so a power-law
+  hub receives pre-combined partial sums, one per shuffle partition, not one
+  message per in-edge, and the per-edge self rows collapse to one per vertex
+  before the shuffle.
+- Prepare is one action: a single aggregate over the vertex table
+  ``(id, w_out, in_degree)`` (``w_out`` is the out-weight total, null for a
+  dangling vertex) fills the links and vertex caches and returns n, m, the
+  in-degree skew and the dangling count (the initial dangling mass is
+  n_dangling / n).
+- Each superstep is one action: the delta/dangling aggregate over the newly
+  persisted state also fills its cache. ``localCheckpoint`` drops the hash
+  partitioning (the truncated state reports ``UnknownPartitioning``), so the
+  lineage is cut only every ``TRUNCATE_EVERY`` supersteps, and the superstep
+  after a cut pays one extra exchange of the state.
+- Expressions are written as SQL strings: each ``Column`` operation is one
+  driver round trip to the JVM, and a superstep would otherwise spend more
+  time building its plan than running it on a small graph.
+- With a ``checkpointer`` the state is written durably with a manifest
+  (counters: edges_scanned, messages_exchanged, skew_ratio; parameters:
+  damping, tol, weighted) every ``checkpoint_every`` supersteps; a killed run
+  resumes from the last manifest and refuses one written with other
+  parameters.
 """
 
 from __future__ import annotations
 
+import time
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -36,56 +57,62 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..checkpoint import CheckpointManager, Counters
-from .iterutil import materialize, materialize_static, release
+from .iterutil import is_deep, release
+
+# Supersteps between lineage cuts. Each persisted state's cached plan holds
+# the previous state's adaptive plan, whose explain string (built on the
+# driver for every executed query) prints both its initial and final plan:
+# the string, and the driver time and heap spent on it, double with every
+# uncut superstep. Measured on a 62k-edge graph (4 cores): a superstep costs
+# the same at depth 1-5, +25% at 6, 2.5x at 8, 10x at 11, and a cut costs
+# about one superstep; over 40 supersteps intervals 4-6 tie and 8 is 28%
+# slower. Five keeps the cut rate low while staying in the flat region.
+TRUNCATE_EVERY = 5
+
+_RESUME_PARAMS = ("damping", "tol", "weighted")
+_DANGLING = "sum(CASE WHEN w_out IS NULL THEN rank END)"
 
 
-def _prepare(edges: DataFrame, weighted: bool, num_partitions: int):
-    """links(src, dst, share), vertices(id), dangling flags — all static."""
-    spark = edges.sparkSession
-    e = edges.select("src", "dst", "weight")
-    if weighted:
-        totals = e.groupBy("src").agg(F.sum("weight").alias("w_out"))
-        links = e.join(totals, "src").select(
-            "src", "dst", (F.col("weight") / F.col("w_out")).alias("share")
-        )
-    else:
-        outdeg = e.groupBy("src").agg(F.count("*").alias("out_degree"))
-        links = e.join(outdeg, "src").select(
-            "src", "dst", (F.lit(1.0) / F.col("out_degree")).alias("share")
-        )
-    # plan-truncation barrier for deep caller lineage, plain persist for
-    # shallow plans (see iterutil.materialize_static): every superstep's
-    # logical plan embeds these static frames, and un-truncated, a deep
-    # lineage (pages → extraction → edges) is re-analyzed per superstep —
-    # analysis grew ~2.5× per iteration (1.3s → 11.4s by superstep 4 on a
-    # 2,000-page graph). Either variant keeps the hash partitioning, so
-    # the per-superstep join still shuffles only the rank table.
-    links = materialize_static(links.repartition(num_partitions, "src"))
-
-    # vertices derive FROM LINKS, not from e: the share join is inner on
-    # src with every src present in its own degree table, so links carries
-    # exactly e's edge set — and reading the just-cached/truncated links
-    # costs one cache scan where a second derivation from e would replay
-    # the caller's whole edge pipeline (measured −1.5s cold at sf0.1).
-    # One aggregation replaces the old union→distinct + distinct + left-join
-    # chain (three shuffles over the endpoint multiset, plus a join): an id
-    # is dangling iff it never appears as src, so has_out = max over a
-    # per-endpoint flag — partial (map-side) agg collapses the 2|E| rows
-    # before the single shuffle. Same id set, same booleans.
-    endpoints = links.select(
-        F.col("src").alias("id"), F.lit(True).alias("has_out")
-    ).unionAll(links.select(F.col("dst").alias("id"), F.lit(False).alias("has_out")))
-    # plain persist, no truncation barrier: unlike links, vertices never
-    # enters the superstep loop — it is analyzed exactly twice (the n count
-    # and the initial ranks frame), and its plan reads the links barrier,
-    # not the caller's lineage
-    vertices = (
-        endpoints.groupBy("id")
-        .agg(F.max("has_out").alias("has_out"))
-        .repartition(num_partitions, "id")
-        .persist()
+def _prepare(edges: DataFrame, weighted: bool):
+    """links(src, dst[, weight]) by src and vertices(id, w_out, in_degree)
+    by id, both lazily persisted; plus the input cut, if one was made."""
+    e = edges.select("src", "dst", "weight") if weighted else edges.select("src", "dst")
+    cut = None
+    if is_deep(e):
+        e = cut = e.localCheckpoint(eager=False)
+    n_parts = int(e.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    links = e.repartition(n_parts, "src").persist()
+    # one scan of the links emits both endpoints; the partial agg collapses
+    # them before the one shuffle by id, and a dst-only id sums no weight
+    w = "double(weight)" if weighted else "1D"
+    endpoints = links.selectExpr(
+        "inline(array("
+        f"named_struct('id', src, 'w', {w}, 'd', 0),"
+        " named_struct('id', dst, 'w', double(NULL), 'd', 1)))"
     )
-    return links, vertices
+    vertices = endpoints.groupBy("id").agg(
+        F.expr("sum(w) AS w_out"), F.expr("sum(d) AS in_degree")
+    ).persist()
+    return links, vertices, cut
+
+
+def _superstep(
+    links: DataFrame, state: DataFrame, weighted: bool, damping: float, base: float, teleport: float
+):
+    """Next state (id, rank, w_out, _old) from state (id, rank, w_out)."""
+    joined = links.join(state.hint("shuffle_hash"), F.expr("src = id"), "right")
+    msg = "weight * rank / w_out" if weighted else "rank / w_out"
+    # a vertex with no out-links has a null dst and message: its message row
+    # carries no value and lands on itself
+    rows = joined.selectExpr(
+        "inline(array("
+        "named_struct('t', id, 'msg', double(NULL), 'old', rank, 'w_out', w_out),"
+        f" named_struct('t', coalesce(dst, id), 'msg', {msg}, 'old', double(NULL), 'w_out', double(NULL))))"
+    )
+    rank = F.lit(base) + F.lit(damping) * (F.expr("coalesce(sum(msg), 0D)") + F.lit(teleport))
+    return rows.groupBy(F.expr("t AS id")).agg(
+        rank.alias("rank"), F.expr("max(w_out) AS w_out"), F.expr("max(old) AS _old")
+    )
 
 
 def pagerank(
@@ -94,7 +121,6 @@ def pagerank(
     tol: float = 1e-6,
     max_iter: int = 100,
     weighted: bool = False,
-    num_partitions: int | None = None,
     checkpointer: CheckpointManager | None = None,
     checkpoint_every: int = 1,
     resume: bool = True,
@@ -103,215 +129,119 @@ def pagerank(
 
     info: {"iterations", "converged", "delta", "counters": {...}}.
     With a ``checkpointer``, state + manifest land every ``checkpoint_every``
-    supersteps and an interrupted run restarts from the last manifest.
+    supersteps and an interrupted run restarts from the last manifest; a
+    manifest written with another ``damping``, ``tol`` or ``weighted`` raises
+    ``ValueError``.
     """
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    params = {"algorithm": "pagerank", "damping": damping, "tol": tol, "weighted": weighted}
+    manifest = checkpointer.latest_manifest() if checkpointer is not None and resume else None
+    if manifest is not None and manifest.get("params", {}).get("algorithm") != "pagerank":
+        manifest = None  # another algorithm's run: start fresh
+    if manifest is not None:
+        saved = manifest["params"]
+        mismatched = [k for k in _RESUME_PARAMS if saved.get(k) != params[k]]
+        if mismatched:
+            raise ValueError(
+                "pagerank checkpoint was written with other parameters: "
+                + ", ".join(f"{k}={saved.get(k)!r} (now {params[k]!r})" for k in mismatched)
+            )
 
-    import time as _t
-
-    _prep0 = _t.time()
-    links, vertices = _prepare(edges, weighted, num_partitions)
-    # ONE job fills the links barrier AND returns m + the in-degree skew:
-    # m = Σ per-dst counts, so a separate links.count() plus a skew pass
-    # would scan the edge table twice more for numbers this aggregation
-    # already has (−2 full passes over E in the prepare phase)
-    indeg_stats = (
-        links.groupBy("dst").agg(F.count("*").alias("d"))
-        .agg(
-            F.sum("d").alias("m"),
-            F.max("d").alias("mx"),
-            F.avg("d").alias("av"),
-        )
-        .first()
-    )
-    m = int(indeg_stats["m"] or 0)
-    n = vertices.count()
+    prep0 = time.time()
+    links, vertices, cut = _prepare(edges, weighted)
+    stats = vertices.selectExpr(
+        "count(*) AS n",
+        "sum(in_degree) AS m",
+        "max(in_degree) AS mx",
+        "avg(CASE WHEN in_degree > 0 THEN in_degree END) AS av",
+        "count_if(w_out IS NULL) AS n_dangling",
+    ).first()
+    n = stats["n"]
     if n == 0:
+        for df in (links, vertices, cut):
+            release(df)
         empty = spark.createDataFrame([], "id long, pagerank double")
         return empty, {"iterations": 0, "converged": True, "delta": 0.0, "counters": {}}
+    m = int(stats["m"])
+    counters = Counters(skew_ratio=float(stats["mx"]) / max(float(stats["av"]), 1e-12))
+    prepare_sec = time.time() - prep0
 
-    skew_ratio = float(indeg_stats["mx"]) / max(float(indeg_stats["av"]), 1e-12)
-
-    counters = Counters(skew_ratio=skew_ratio)
-    _prep_sec = _t.time() - _prep0
-    _loop0 = _t.time()
-    start_step = 0
-    ranks = None
-    if checkpointer is not None and resume:
-        manifest = checkpointer.latest_manifest()
-        if manifest is not None and manifest.get("params", {}).get("algorithm") == "pagerank":
-            start_step = manifest["superstep"]
-            counters = Counters.from_dict(manifest["counters"])
-            ranks = checkpointer.load_states(spark, manifest)["ranks"]
-    fresh_start = ranks is None
-    if fresh_start:
-        # fill the initial-state cache with the dangling aggregate itself
-        # (an aggregate scans every partition), then harden to a
-        # LogicalRDD below — materialize()'s separate count here was a
-        # redundant prep job over state the aggregate evaluates anyway.
-        # The hard truncation still matters: left as a projection over
-        # the vertices InMemoryRelation, every superstep's analyzed plan
-        # would chain through the vertices/links derivations back to the
-        # caller's lineage, and the convergence-superstep analysis was
-        # measured ~2s slower at sf0.1 for exactly that reason.
-        ranks = vertices.select(
-            "id", F.lit(1.0 / n).alias("rank"), "has_out"
-        ).persist()
+    loop0 = time.time()
+    if manifest is not None:
+        start_step = manifest["superstep"]
+        counters = Counters.from_dict(manifest["counters"])
+        state = checkpointer.load_states(spark, manifest)["ranks"]
+        dangling = state.selectExpr(_DANGLING).first()[0] or 0.0
+        release(vertices)
+        persisted = None
     else:
-        ranks = materialize(ranks)
+        start_step = 0
+        state = vertices.select("id", F.lit(1.0 / n).alias("rank"), "w_out")
+        dangling = stats["n_dangling"] / n
+        persisted = vertices
 
+    # `persisted` is the cache the state reads, `truncated` the last lineage
+    # cut the chain reads from; the result keeps at most one of them
+    truncated = None
     delta = float("inf")
     it = start_step
     converged = False
     base = (1.0 - damping) / n
     iter_secs: list[float] = []
-    import os as _os
-    import time as _time
-
-    _debug = bool(_os.environ.get("SPARK_GRAFT_DEBUG"))
-    # ONE job per superstep: the new rank state is persisted lazily and the
-    # combined delta+dangling aggregate both populates the cache (an
-    # aggregate scans every partition) and returns the convergence delta and
-    # the next iteration's dangling mass. A separate materialize-count job
-    # would re-analyze the same deep plan on the driver a second time —
-    # planning + scheduling are serial, so at high core counts that second
-    # job is what caps scaling efficiency, not the superstep's real work.
-    # States are persisted (real stats, constant digits); the plan is
-    # hard-truncated via localCheckpoint only every few supersteps (reading
-    # from the already-populated cache), which bounds plan depth while
-    # keeping the common path at a single job.
-    TRUNCATE_EVERY = 4
-    dangling = (
-        ranks.filter(~F.col("has_out")).agg(F.sum("rank")).first()[0] or 0.0
-    )
-    if fresh_start:
-        # cache populated by the aggregate above — the eager checkpoint is
-        # a cache→checkpoint copy yielding the flat LogicalRDD the loop's
-        # analysis cost depends on (see the fresh_start note)
-        cached = ranks
-        ranks = cached.localCheckpoint(eager=True)
-        cached.unpersist()
-    # `state` is always the EXACT frame that was persisted/materialized —
-    # non-cascading unpersist only frees a cache whose plan is sameResult
-    # with the argument, so releasing a Project over it (ranks =
-    # state.drop('_old')) would silently leak every persist-only superstep's
-    # MEMORY_AND_DISK blocks for the job lifetime.
-    state = ranks
-    pending_release: list[DataFrame] = []
     while it < max_iter:
         it += 1
-        _t0 = _time.time()
-        contribs = (
-            links.join(ranks.select("id", "rank"), links.src == F.col("id"))
-            .groupBy("dst")
-            .agg(F.sum(F.col("share") * F.col("rank")).alias("contrib"))
-        )
-        new_ranks = (
-            ranks.join(contribs, ranks.id == contribs.dst, "left")
-            .select(
-                ranks.id,
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dangling / n))
-                ).alias("rank"),
-                F.col("has_out"),
-                F.col("rank").alias("_old"),
-            )
-        )
-        truncate = (it % TRUNCATE_EVERY == 0) or checkpointer is not None
-        new_ranks = new_ranks.persist(StorageLevel.MEMORY_AND_DISK)
-        row = new_ranks.agg(
-            F.max(F.abs(F.col("rank") - F.col("_old"))).alias("delta"),
-            F.sum(F.when(~F.col("has_out"), F.col("rank"))).alias("dangling"),
+        t0 = time.time()
+        new = _superstep(links, state, weighted, damping, base, dangling / n)
+        new = new.persist(StorageLevel.MEMORY_AND_DISK)
+        # the aggregate scans every partition, so this one job fills the cache
+        row = new.selectExpr(
+            "max(abs(rank - _old)) AS delta", f"{_DANGLING} AS dangling"
         ).first()
         delta = row["delta"]
         dangling = row["dangling"] or 0.0
-        _t1 = _time.time()
-        if truncate:
-            # cache is already populated by the aggregate scan above, so the
-            # eager checkpoint is a cache→checkpoint copy with real (small)
-            # carried stats — the compounding-sizeInBytes trap documented in
-            # iterutil.materialize never arises
-            cached = new_ranks
-            new_ranks = cached.localCheckpoint(eager=True)
-            cached.unpersist()
-        if _debug:
-            print(
-                f"[pagerank] iter={it} job={_t1 - _t0:.2f}s "
-                f"trunc={_time.time() - _t1:.2f}s delta={delta:.2e}",
-                flush=True,
-            )
+        # the new cache is filled, so the previous one is no longer read
+        release(persisted)
+        persisted = state = new
+        if it % TRUNCATE_EVERY == 0:
+            # cache → checkpoint copy; everything older can go
+            state = new.localCheckpoint(eager=True)
+            release(persisted)
+            release(truncated)
+            persisted, truncated = None, state
         counters.edges_scanned += m
         counters.messages_exchanged += m
-        iter_secs.append(round(_time.time() - _t0, 3))
+        iter_secs.append(round(time.time() - t0, 3))
 
-        old_state = state
-        state = new_ranks
-        ranks = new_ranks.drop("_old")
         if checkpointer is not None and (it % checkpoint_every == 0 or delta < tol):
             checkpointer.save(
-                it,
-                {"ranks": ranks},
-                counters,
-                params={"algorithm": "pagerank", "damping": damping, "tol": tol, "delta": delta},
+                it, {"ranks": state.drop("_old")}, counters, params={**params, "delta": delta}
             )
-        if truncate:
-            # the new state is self-contained — everything older can go
-            release(old_state)
-            for df in pending_release:
-                release(df)
-            pending_release = []
-        else:
-            # old state may still back new_ranks' un-truncated lineage;
-            # defer its release until the next hard truncation
-            pending_release.append(old_state)
         if delta < tol:
             converged = True
             break
 
-    if pending_release:
-        # exited on a persist-only superstep: cut the final state loose from
-        # its un-truncated lineage, then drain every deferred ancestor —
-        # otherwise their caches outlive the call. The state's cache is
-        # already populated (the delta aggregate scanned every partition),
-        # so the eager checkpoint is a cache→checkpoint copy with real
-        # stats — materialize()'s persist+count here would re-run a
-        # redundant count job over the same populated cache.
-        final_state = state.localCheckpoint(eager=True)
-        release(state)
-        for df in pending_release:
-            release(df)
-        pending_release = []
-        state = final_state
-        ranks = state.drop("_old") if "_old" in state.columns else state
-
-    if it == start_step and start_step == 0:
-        # zero supersteps ran (max_iter=0): the state is still the initial
-        # projection over the static frames — make it self-contained before
-        # their blocks are released below
-        state = materialize(state)
-        ranks = state
-
-    # the final state is self-contained (materialized above or at the last
-    # truncation), so the static frames' checkpoint blocks can go now —
-    # previously they stayed pinned for the session lifetime
+    # A chain that reads a checkpoint of this call (the input cut or a
+    # truncation) would break once that checkpoint is released, so its
+    # filled cache is copied into one final checkpoint. A chain over the
+    # caller's input alone keeps its cache and recomputes from the input.
+    if persisted is not None and (cut is not None or truncated is not None):
+        state = state.localCheckpoint(eager=True)
+        release(persisted)
+        release(truncated)
+        persisted, truncated = None, state
     release(links)
-    release(vertices)
+    release(cut)
 
-    result = ranks.select("id", F.col("rank").alias("pagerank"))
+    result = state.selectExpr("id", "rank AS pagerank")
     info = {
-        "prepare_sec": round(_prep_sec, 3),
-        "loop_sec": round(_t.time() - _loop0, 3),
+        "prepare_sec": round(prepare_sec, 3),
+        "loop_sec": round(time.time() - loop0, 3),
         "iterations": it,
         "converged": converged,
         "delta": float(delta),
         "counters": counters.to_dict(),
         # per-superstep wall clock: superstep 1 carries one-time JVM JIT /
-        # codegen warmup (measured ~40% over steady state at 195M edges);
-        # steady-state throughput reads iter_secs[1:]
+        # codegen warmup; steady-state throughput reads iter_secs[1:]
         "iter_secs": iter_secs,
         "n_vertices": n,
         "n_edges": m,

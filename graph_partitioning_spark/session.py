@@ -13,6 +13,19 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+MAX_DRIVER_MEMORY_GB = 24
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` sized from host RAM: 60% of physical memory,
+    at least 1g and at most ``MAX_DRIVER_MEMORY_GB``. In local mode the
+    driver JVM also runs the executors; a heap larger than the host can back
+    gets the process killed by the kernel instead of failing in the JVM."""
+    try:
+        ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, OSError, ValueError):  # no sysconf on this platform
+        return f"{MAX_DRIVER_MEMORY_GB}g"
+    return f"{max(1, min(MAX_DRIVER_MEMORY_GB, int(0.6 * ram / 2**30)))}g"
 
 
 def get_spark(
@@ -27,6 +40,8 @@ def get_spark(
     ``shuffle_partitions`` defaults to the core count — for the local test
     rig; a real cluster run sets this to ~2-3x total executor cores via
     ``spark-submit --conf`` (and AQE coalesces down from there).
+    ``spark.driver.memory`` is ``$SPARK_GRAFT_DRIVER_MEM`` if set, else
+    :func:`default_driver_memory`.
     """
     if cpus is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -49,7 +64,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -17,15 +17,16 @@ def _relabel(src, dst):
     return ids, s, d
 
 
-def pagerank_oracle(src, dst, damping=0.85, tol=1e-6, max_iter=100):
-    """Power iteration with uniform dangling redistribution.
+def pagerank_oracle(src, dst, damping=0.85, tol=1e-6, max_iter=100, weights=None):
+    """Power iteration with uniform dangling redistribution; with ``weights``
+    a vertex splits its rank over its out-edges in proportion to them.
     Returns dict vertex_id -> rank."""
     ids, s, d = _relabel(src, dst)
     n = len(ids)
+    w = np.ones(len(s)) if weights is None else np.asarray(weights, dtype=float)
     outdeg = np.bincount(s, minlength=n).astype(float)
     r = np.full(n, 1.0 / n)
-    share = np.zeros(len(s))
-    share[:] = 1.0 / outdeg[s]
+    share = w / np.bincount(s, weights=w, minlength=n)[s]
     for _ in range(max_iter):
         contrib = np.bincount(d, weights=r[s] * share, minlength=n)
         dangling = r[outdeg == 0].sum()

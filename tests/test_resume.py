@@ -46,6 +46,40 @@ def test_pagerank_resume_identical(spark, graph, tmp_path):
         assert got[v] == pytest.approx(want[v], abs=1e-12)
 
 
+@pytest.mark.parametrize(
+    "changed", [{"damping": 0.9}, {"tol": 1e-6}, {"weighted": True}]
+)
+def test_pagerank_resume_refuses_mismatched_parameters(spark, graph, tmp_path, changed):
+    """A manifest written with another damping, tol or weighted flag would
+    continue a different fixed-point iteration: resume must refuse it."""
+    directed, und = graph
+    params = {"damping": 0.85, "tol": 1e-8, "weighted": False}
+    cp = CheckpointManager(str(tmp_path / "prm"), "run")
+    pagerank(directed, max_iter=2, checkpointer=cp, **params)
+    saved = cp.latest_manifest()["params"]
+    assert {k: saved[k] for k in params} == params
+
+    (name,) = changed
+    blocks = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    with pytest.raises(ValueError, match=name):
+        pagerank(
+            directed,
+            max_iter=4,
+            checkpointer=CheckpointManager(str(tmp_path / "prm"), "run"),
+            **{**params, **changed},
+        )
+    # refused before any block is built
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == blocks
+    # the matching parameters still resume where the first run stopped
+    _, info = pagerank(
+        directed,
+        max_iter=4,
+        checkpointer=CheckpointManager(str(tmp_path / "prm"), "run"),
+        **params,
+    )
+    assert info["iterations"] == 4
+
+
 def test_components_resume_identical(spark, graph, tmp_path):
     directed, und = graph
     full, _ = connected_components(und)
